@@ -8,11 +8,12 @@ SPARQL 1.1 §9.1).
 - alternative  -> union
 - zero_or_one  -> union with the identity mapping
 - negated (!)  -> scan with predicate not-in set
-- zero/one_or_more (* +) -> iterative frontier expansion (distributed
-  semi-naive transitive closure): frontier = frontier JOIN step MINUS
-  seen, localCheckpoint per iteration to cut lineage. This is the one
-  operator with no declarative Spark primitive (SURVEY §7 M4) — the
-  loop is driver-side but every step is a full cluster-parallel join.
+- zero/one_or_more (* +) -> transitive closure (pointer doubling or
+  semi-naive delta iteration) or, with one endpoint bound, a frontier
+  BFS from it. This is the one operator with no declarative Spark
+  primitive (SURVEY §7 M4): every loop runs on the shared fixpoint
+  driver in ``iterate.py`` — driver-side rounds, each one
+  cluster-parallel join and one Spark action.
 
 GRAPH ?g around a path runs as ONE grouped closure: every pair carries
 a flat graph key and the iterative joins key on (graph, node), so the
@@ -30,6 +31,7 @@ import uuid
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..iterate import KEY, ROUND, checkpoint, expand, iterate, keyed
 from .algebra import PathExpr, PathPattern, TriplePattern, Var
 from .terms import Term
 
@@ -207,13 +209,16 @@ def _negated_pairs(
 #: pointer doubling to semi-naive delta iteration (see _transitive_closure)
 SEMINAIVE_THRESHOLD = 250_000
 
+#: internal columns of the closure loops
+_START = "__start"
+_MID = "__mid"
+
 
 def _transitive_closure(
     step: DataFrame,
     s: str,
     o: str,
     mode: str = "auto",
-    max_rounds: int | None = None,
     group: tuple[str, ...] = (),
 ) -> DataFrame:
     """Transitive closure, two physical strategies:
@@ -223,144 +228,56 @@ def _transitive_closure(
       diameter-d graph. Right when the step relation (and hence the
       closure) is small: rounds, not per-round work, dominate, since
       every round is a cluster-wide shuffle.
-    - ``seminaive``: classic delta iteration — each round extends only
-      the pairs DISCOVERED LAST ROUND by one base step (delta JOIN step,
-      anti-join seen). d rounds, but per-round work is |delta|x|step|,
-      never |closure|x|closure|. Right for big graphs with short
-      diameters (the Wikidata P279*/P131* shape: tens of millions of
-      edges, diameter ~30): doubling's self-join of a 10^8-pair closure
-      is the scale-killer, not the round count.
+    - ``seminaive``: classic delta iteration, run as a BFS grouped on the
+      start node — each round extends only the pairs DISCOVERED LAST
+      ROUND by one base step. d rounds, but per-round work is
+      |delta|x|step|, never |closure|x|closure|. Right for big graphs
+      with short diameters (the Wikidata P279*/P131* shape: tens of
+      millions of edges, diameter ~30): doubling's self-join of a
+      10^8-pair closure is the scale-killer, not the round count.
     - ``auto`` (default): seminaive when the step relation exceeds
       SEMINAIVE_THRESHOLD rows, doubling otherwise.
 
     ``group`` columns (the flat graph key of a GRAPH ?var closure) join
     and dedup alongside the endpoints: ONE closure loop covers every
     graph, with the iteration count set by the max diameter across
-    groups — not a loop per graph.
-
-    Join/dedup run on flat serialized keys, not the raw term structs:
-    struct join keys + downstream nested-field extraction trip a
-    Catalyst binding bug (see Compiler._keyed_join), and flat string
-    keys hash cheaper at shuffle time anyway. localCheckpoint()
-    truncates lineage per round in both modes."""
+    groups — not a loop per graph. Both modes run on iterate.iterate."""
     gcols = list(group)
-    out_cols = [s, o, *gcols]
-
-    def with_key(df: DataFrame) -> DataFrame:
-        return df.withColumn(
-            "__pk", F.to_json(F.struct(F.col(s), F.col(o), *[F.col(c) for c in gcols]))
-        )
-
-    paths = with_key(step.select(*out_cols)).dropDuplicates(["__pk"]).localCheckpoint()
-    n = paths.count()
+    cols = [s, o, *gcols]
+    base, n = checkpoint(
+        keyed(step.select(*cols), *cols).dropDuplicates([KEY]), F.count(F.lit(1))
+    )
     if mode == "auto":
         mode = "seminaive" if n > SEMINAIVE_THRESHOLD else "doubling"
 
-    join_on = ["__mid", *gcols]
-
     if mode == "seminaive":
-        # run until the delta is empty — diameter is data, not a
-        # constant, so a fixed round count would silently truncate the
-        # closure (same rationale as _reachable_from); the cap is a
-        # runaway bound only and raising beats returning a wrong answer
-        rounds = 65_536 if max_rounds is None else max_rounds
-        base = paths  # deduped one-step relation, checkpointed
-        delta = paths
-        for _ in range(rounds):
-            extended = (
-                delta.select(*gcols, F.col(s), F.col(o).alias("__mid"))
-                .join(base.select(*gcols, F.col(s).alias("__mid"), F.col(o)), on=join_on)
-                .select(*out_cols)
-            )
-            new = (
-                with_key(extended)
-                .dropDuplicates(["__pk"])
-                .join(paths.select("__pk"), on="__pk", how="left_anti")
-                .localCheckpoint()
-            )
-            if new.limit(1).count() == 0:
-                break
-            paths = paths.unionByName(new).localCheckpoint()
-            delta = new
-        else:
-            raise RuntimeError(
-                f"transitive closure did not converge within {rounds} rounds"
-                " — raise max_rounds if the graph really is this deep"
-            )
-        return paths.drop("__pk")
+        seed = base.select(F.col(s).alias(_START), o, *gcols)
+        closure = expand(seed, base, s, o, (_START, *gcols), name="transitive closure")
+        return closure.select(F.col(_START).alias(s), o, *gcols)
 
-    rounds = 20 if max_rounds is None else max_rounds  # diameter up to 2^20
-    for _ in range(rounds):
-        doubled = (
-            paths.select(*gcols, F.col(s), F.col(o).alias("__mid"))
-            .join(paths.select(*gcols, F.col(s).alias("__mid"), F.col(o)), on=join_on)
-            .select(*out_cols)
+    def double(paths: DataFrame, _frontier: DataFrame) -> DataFrame:
+        joined = (
+            paths.select(*gcols, s, F.col(o).alias(_MID))
+            .join(paths.select(*gcols, F.col(s).alias(_MID), o), on=[_MID, *gcols])
+            .select(*cols)
         )
-        grown = (
-            with_key(doubled)
-            .unionByName(paths)
-            .dropDuplicates(["__pk"])
-            .localCheckpoint()
-        )
-        n2 = grown.count()
-        if n2 == n:
-            break
-        paths, n = grown, n2
-    return paths.drop("__pk")
+        return paths.unionByName(
+            keyed(joined, *cols), allowMissingColumns=True
+        ).dropDuplicates([KEY])
+
+    closure = iterate(base, double, F.count(F.lit(1)), name="transitive closure")
+    return closure.select(*cols)
 
 
 def _reachable_from(
-    step: DataFrame,
-    s: str,
-    o: str,
-    src_col,
-    max_rounds: int = 4096,
-    group: tuple[str, ...] = (),
+    step: DataFrame, s: str, o: str, src_col, group: tuple[str, ...] = ()
 ) -> DataFrame:
     """Nodes reachable in >= 1 step from a bound source: frontier BFS,
     NOT the global closure — with a bound endpoint the work is the
     reachable subgraph, however large the full graph is. With ``group``
-    columns the BFS runs over every graph at once, keyed (graph, node).
-    The loop exits on an empty frontier; max_rounds is a runaway bound
-    only (a 50-ish cap would silently truncate deep chains — diameter
-    is data, not a constant)."""
-    gcols = list(group)
-    key = lambda c: F.to_json(  # noqa: E731
-        F.struct(c.alias("v"), *[F.col(x) for x in gcols])
-    )
-    visited = (
-        step.filter(step[s].eqNullSafe(src_col))
-        .select(o, *gcols)
-        .withColumn("__nk", key(F.col(o)))
-        .dropDuplicates(["__nk"])
-        .localCheckpoint()
-    )
-    frontier = visited
-    for _ in range(max_rounds):
-        hop = frontier.select(
-            F.col(o).alias("__from"), *[F.col(c).alias(f"__f_{c}") for c in gcols]
-        )
-        cond = F.col("__from").eqNullSafe(step[s])
-        for c in gcols:
-            cond = cond & (F.col(f"__f_{c}") == step[c])
-        nxt = (
-            hop.join(step, cond)
-            .select(o, *gcols)
-            .withColumn("__nk", key(F.col(o)))
-            .dropDuplicates(["__nk"])
-            .join(visited.select("__nk"), on="__nk", how="left_anti")
-            .localCheckpoint()
-        )
-        if nxt.limit(1).count() == 0:
-            break
-        visited = visited.unionByName(nxt).localCheckpoint()
-        frontier = nxt
-    else:
-        raise RuntimeError(
-            f"BFS frontier did not drain within {max_rounds} rounds"
-            " — raise max_rounds if the graph really is this deep"
-        )
-    return visited.drop("__nk")
+    columns the BFS runs over every graph at once, keyed (graph, node)."""
+    seed = step.filter(step[s].eqNullSafe(src_col))
+    return expand(seed, step, s, o, group, name="property path BFS").drop(ROUND)
 
 
 def _graph_catalog(compiler) -> list[str]:

